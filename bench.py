@@ -89,6 +89,8 @@ from __future__ import annotations
 import gc
 import json
 import os
+import signal
+import subprocess
 import sys
 import time
 
@@ -423,8 +425,46 @@ def parse_probe_lines(stdout_text: str) -> dict:
             doc = json.loads(line)
         except ValueError:
             continue
-        recs.update(doc.get("probes") or doc.get("probe_partial") or {})
+        payload = doc.get("probes") or doc.get("probe_partial")
+        if isinstance(payload, dict):  # a malformed payload is skipped
+            recs.update(payload)
     return recs
+
+
+# Tier/floors children in flight. Each runs in its own process group
+# with the JVM it starts, so killing the group leaves no orphan JVM
+# busy on the cores the next measurement uses.
+_LIVE_CHILDREN: list[subprocess.Popen] = []
+
+
+def kill_live_children() -> None:
+    for proc in _LIVE_CHILDREN:
+        try:
+            os.killpg(proc.pid, signal.SIGKILL)
+        except ProcessLookupError:
+            pass
+
+
+def run_child(args: list[str], timeout: float) -> str:
+    """``subprocess.run(args, capture_output=True, text=True, timeout=timeout,
+    check=True).stdout``, except that the child runs in a new process
+    group that a timeout or ``kill_live_children`` kills whole."""
+    proc = subprocess.Popen(
+        args, stdout=subprocess.PIPE, stderr=subprocess.PIPE, text=True,
+        start_new_session=True,
+    )
+    _LIVE_CHILDREN.append(proc)
+    try:
+        out, err = proc.communicate(timeout=timeout)
+    except subprocess.TimeoutExpired:
+        os.killpg(proc.pid, signal.SIGKILL)
+        out, _ = proc.communicate()
+        raise subprocess.TimeoutExpired(args, timeout, output=out) from None
+    finally:
+        _LIVE_CHILDREN.remove(proc)
+    if proc.returncode:
+        raise subprocess.CalledProcessError(proc.returncode, args, out, err)
+    return out
 
 
 def _amplified_is_fresh(target: str, src: str) -> bool:
@@ -810,12 +850,11 @@ def main() -> None:
 
     def _emit_partial(signum, frame):  # noqa: ARG001
         try:
+            kill_live_children()
             out["value"] = round(total, 3)
             print(build_summary_line(out), flush=True)
         finally:
             os._exit(128 + signum)
-
-    import signal
 
     signal.signal(signal.SIGTERM, _emit_partial)
     # Suite-level variance band (round 8, VERDICT r7 item 3): the
@@ -1005,8 +1044,6 @@ def main() -> None:
         tier: str, names: list[str], big_dir: str, scale_key: str,
         timeout_sec: int,
     ) -> dict:
-        import subprocess
-
         probe_path = os.path.join(
             os.path.dirname(os.path.abspath(__file__)),
             "scripts",
@@ -1015,18 +1052,11 @@ def main() -> None:
         recs: dict[str, dict] = {}
         stdout_text = ""
         try:
-            proc = subprocess.run(
-                [sys.executable, probe_path, "--tier", tier, *names],
-                capture_output=True,
-                text=True,
-                timeout=timeout_sec,
-                check=True,
+            stdout_text = run_child(
+                [sys.executable, probe_path, "--tier", tier, *names], timeout_sec
             )
-            stdout_text = proc.stdout or ""
         except subprocess.TimeoutExpired as exc:
             stdout_text = exc.stdout or ""
-            if isinstance(stdout_text, bytes):
-                stdout_text = stdout_text.decode("utf-8", "replace")
             errors[f"fresh:{tier}"] = f"TimeoutExpired: {timeout_sec}s"
         except Exception as exc:  # noqa: BLE001
             stdout_text = getattr(exc, "stdout", "") or ""
@@ -1255,8 +1285,6 @@ def main() -> None:
     out["isolated_floors"] = {}
     spark.stop()
     if top10:
-        import subprocess
-
         probe_path = os.path.join(
             os.path.dirname(os.path.abspath(__file__)),
             "scripts",
@@ -1269,14 +1297,10 @@ def main() -> None:
         # the timeout is a backstop, not a budget, and a failure is
         # recorded loudly so the artifact shows why floors are absent.
         try:
-            proc = subprocess.run(
-                [sys.executable, probe_path, "--floors-only", *top10],
-                capture_output=True,
-                text=True,
-                timeout=1500,
-                check=True,
+            stdout_text = run_child(
+                [sys.executable, probe_path, "--floors-only", *top10], 1500
             )
-            rec = json.loads(proc.stdout.strip().splitlines()[-1])
+            rec = json.loads(stdout_text.strip().splitlines()[-1])
             out["isolated_floors"] = rec.get("probes", {})
             print(
                 f"[floors] {len(out['isolated_floors'])} isolated "

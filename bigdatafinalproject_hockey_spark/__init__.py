@@ -25,4 +25,10 @@ Layout:
     plans/      physical-plan inspection helpers
 """
 
+import os
+
 __version__ = "0.1.0"
+
+# Staged sinks, sidecars and stores: ``.tmp`` in the checkout the
+# package is imported from, so a copy of the repo keeps its own state.
+STATE_ROOT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")

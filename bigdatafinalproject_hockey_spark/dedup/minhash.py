@@ -49,6 +49,7 @@ from bigdatafinalproject_hockey_spark.functions.hashing import (
     splitmix64,
 )
 from bigdatafinalproject_hockey_spark.functions.text import tokens_expr
+from bigdatafinalproject_hockey_spark.functions.literals import literal_array
 from bigdatafinalproject_hockey_spark.operators.partitioning import ensure_parallelism
 
 # Universal-hash family for the PORTABLE minhash variant:
@@ -346,8 +347,8 @@ def _portable_signatures(
         ).alias("hs"),
     )
     ks = F.sequence(F.lit(0), F.lit(num_hashes - 1))
-    a_arr = F.array(*[F.lit(v).cast("long") for v in a_co])
-    b_arr = F.array(*[F.lit(v).cast("long") for v in b_co])
+    a_arr = literal_array(a_co, "bigint")
+    b_arr = literal_array(b_co, "bigint")
     sig_expr = F.aggregate(
         F.col("hs"),
         F.array_repeat(F.lit(_MINHASH_P).cast("long"), num_hashes),

@@ -19,6 +19,7 @@ from collections.abc import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from bigdatafinalproject_hockey_spark.functions.literals import literal_array
 
 
 def agg_group_multi(
@@ -110,7 +111,7 @@ def agg_approx(
     Sketch internals are engine-specific → rows-only driver check;
     tests/test_modules.py bounds both errors against the exact answers.
     """
-    qarr = F.array(*[F.lit(q) for q in quantiles])
+    qarr = literal_array(quantiles, "double")
     return df.groupBy(*keys).agg(
         F.approx_count_distinct(distinct_col, rsd=rsd).alias("approx_distinct"),
         F.percentile_approx(quantile_col, qarr, accuracy).alias("approx_quantiles"),
@@ -151,7 +152,7 @@ def agg_approx_checked(
     the (broadcast, keys-sized) estimates against the raw rows. At
     100 TB the probe joins a per-group constants table — map-side.
     """
-    qarr = F.array(*[F.lit(q) for q in quantiles])
+    qarr = literal_array(quantiles, "double")
     sk = df.groupBy(*keys).agg(
         F.approx_count_distinct(distinct_col, rsd=rsd).alias("_approx_distinct"),
         F.percentile_approx(quantile_col, qarr, accuracy).alias("_aq"),

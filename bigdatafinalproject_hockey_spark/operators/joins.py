@@ -18,8 +18,9 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from bigdatafinalproject_hockey_spark.functions.literals import literal_array
 
 
 def join_equi(
@@ -99,13 +100,6 @@ def join_star(
     return out
 
 
-def join_expr(
-    left: DataFrame, right: DataFrame, cond: Column, how: str = "inner"
-) -> DataFrame:
-    """General boolean-expression join for non-same-named keys."""
-    return left.join(right, cond, how)
-
-
 def join_salted(
     left: DataFrame,
     right: DataFrame,
@@ -144,7 +138,7 @@ def join_salted(
         "_salt", F.pmod(F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(salt))
     )
     right_s = right.withColumn(
-        "_salt", F.explode(F.array(*[F.lit(i).cast("long") for i in range(salt)]))
+        "_salt", F.explode(literal_array(range(salt), "bigint"))
     )
     return left_s.join(right_s, [*keys, "_salt"], how).drop("_salt")
 

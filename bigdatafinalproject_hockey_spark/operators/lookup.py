@@ -17,16 +17,11 @@ regex fallback for unmapped names (reference code/experiment.py:58-246,
 from __future__ import annotations
 
 from collections.abc import Mapping
-from itertools import chain
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-
-def literal_map_expr(mapping: Mapping[str, str]) -> Column:
-    """Constant MapType expression from a Python dict
-    (reference code/experiment.py:272-274)."""
-    return F.create_map(*[F.lit(x) for x in chain.from_iterable(mapping.items())])
+from bigdatafinalproject_hockey_spark.functions.literals import literal_map
 
 
 def map_literal_lookup(
@@ -35,7 +30,7 @@ def map_literal_lookup(
     """Per-row map lookup; misses → NULL (reference code/experiment.py:308-310).
     Uses element_at-style indexing rather than the deprecated
     ``getItem(Column)`` the reference warns on (output.txt:18)."""
-    return df.withColumn(out, literal_map_expr(mapping)[F.col(col)])
+    return df.withColumn(out, literal_map(mapping)[F.col(col)])
 
 
 def lookup_with_fallback(
@@ -48,7 +43,7 @@ def lookup_with_fallback(
     """coalesce(map hit, fallback rule) — normalization with default
     (reference code/experiment.py:311-316)."""
     return df.withColumn(
-        out, F.coalesce(literal_map_expr(mapping)[F.col(col)], fallback)
+        out, F.coalesce(literal_map(mapping)[F.col(col)], fallback)
     )
 
 

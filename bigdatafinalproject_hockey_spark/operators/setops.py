@@ -1,7 +1,8 @@
 """Set operations (SURVEY.md §2.9).
 
 The reference only concatenates chunk results (pd.concat,
-create_subsample.py:90); we provide the full family.
+create_subsample.py:90); DataFrame's own ``distinct``, ``intersectAll``
+and ``exceptAll`` cover the rest of the family.
 """
 
 from __future__ import annotations
@@ -16,14 +17,3 @@ def union_all(*dfs: DataFrame) -> DataFrame:
     unionByName, not union: column order must not silently matter."""
     return reduce(lambda a, b: a.unionByName(b), dfs)
 
-
-def union_distinct(*dfs: DataFrame) -> DataFrame:
-    return union_all(*dfs).distinct()
-
-
-def intersect_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.intersectAll(b)
-
-
-def except_all(a: DataFrame, b: DataFrame) -> DataFrame:
-    return a.exceptAll(b)

@@ -33,10 +33,10 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from bigdatafinalproject_hockey_spark.functions.literals import literal_map
 from bigdatafinalproject_hockey_spark.operators import (
     aggregates as agg_ops,
     joins as join_ops,
-    lookup as lookup_ops,
     sampling as sample_ops,
     scalar as scalar_ops,
     strings as string_ops,
@@ -84,7 +84,7 @@ def _team_code_expr(cfg: PipelineConfig, raw: str) -> F.Column:
     fallback = string_ops.strip_charset_expr(norm)
     if not cfg.team_map:
         return fallback
-    return F.coalesce(lookup_ops.literal_map_expr(cfg.team_map)[norm], fallback)
+    return F.coalesce(literal_map(cfg.team_map)[norm], fallback)
 
 
 def clean_results(df: DataFrame, cfg: PipelineConfig) -> DataFrame:

@@ -13,8 +13,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdatafinalproject_hockey_spark import STATE_ROOT
 from bigdatafinalproject_hockey_spark.catalog import SCHEMAS, load_table
 from bigdatafinalproject_hockey_spark.functions.numeric import cents_expr
+from bigdatafinalproject_hockey_spark.functions.literals import literal_array
 from bigdatafinalproject_hockey_spark.ml import (
     baselines,
     evaluate_binary,
@@ -37,7 +39,7 @@ from bigdatafinalproject_hockey_spark.streaming import (
     tumbling_agg,
 )
 
-TMP_DIR = "/root/repo/.tmp"
+TMP_DIR = STATE_ROOT
 
 
 def _sf_tag(sf_dir: str) -> str:
@@ -920,9 +922,7 @@ def q_ml_eval_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     swept = scored.select(
         "label",
         "score",
-        F.explode(
-            F.array(*[F.lit(t) for t in _PR_THRESHOLDS])
-        ).alias("threshold"),
+        F.explode(literal_array(_PR_THRESHOLDS, "double")).alias("threshold"),
     )
     hit = F.col("score") > F.col("threshold")
     pos = F.col("label") == 1

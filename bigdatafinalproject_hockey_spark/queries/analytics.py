@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from bigdatafinalproject_hockey_spark import STATE_ROOT
 from bigdatafinalproject_hockey_spark.catalog import load_table
 from bigdatafinalproject_hockey_spark.operators import bucketing as bucket_ops
 from bigdatafinalproject_hockey_spark.plancapture import capture
@@ -24,7 +25,7 @@ from bigdatafinalproject_hockey_spark.functions.numeric import (
 )
 from bigdatafinalproject_hockey_spark.queries.base import register
 
-TMP_DIR = "/root/repo/.tmp"
+TMP_DIR = STATE_ROOT
 
 _EVENT_TYPES = ["click", "view", "purchase", "signup", "error"]
 

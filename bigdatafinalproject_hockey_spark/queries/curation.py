@@ -17,10 +17,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from bigdatafinalproject_hockey_spark import STATE_ROOT
 from bigdatafinalproject_hockey_spark.catalog import SCHEMAS, load_table
 from bigdatafinalproject_hockey_spark.dedup.exact import dedup_incremental
 from bigdatafinalproject_hockey_spark.dedup.minhash import shingles_expr
 from bigdatafinalproject_hockey_spark.functions.numeric import cents_expr, round6
+from bigdatafinalproject_hockey_spark.functions.literals import literal_array, literal_map
 from bigdatafinalproject_hockey_spark.functions.hashing import (
     portable_hash64_expr,
     portable_hash64_sql,
@@ -39,7 +41,7 @@ _SQL_TOKS = (
     "list_filter(string_split_regex(lower({c}), '[^a-z0-9]+'), x -> x <> '')"
 )
 
-TMP_DIR = "/root/repo/.tmp"
+TMP_DIR = STATE_ROOT
 
 
 # ---------------------------------------------------------------------------
@@ -1705,9 +1707,7 @@ def q_pipeline_training_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB the md5 ordering also rebalances skewed languages across
     the sort — no hot partition beyond the language key itself."""
     docs = load_table(spark, "documents", sf_dir)
-    quota = F.create_map(
-        *[F.lit(x) for kv in _MIX_QUOTAS.items() for x in kv]
-    )[F.col("lang")]
+    quota = literal_map(_MIX_QUOTAS)[F.col("lang")]
     t = docs.select(
         "doc_id",
         "lang",
@@ -2511,7 +2511,7 @@ def _quality_units_expr(tk_col, hash_fn=None):
     for the fast path)."""
     hash_fn = hash_fn or portable_hash64_expr
     max63 = F.lit((1 << 63) - 1).cast("long")
-    w_arr = F.array(*[F.lit(w).cast("long") for w in _QC_WEIGHTS])
+    w_arr = literal_array(_QC_WEIGHTS, "bigint")
     bucket_w = F.transform(
         tk_col,
         lambda t: F.element_at(

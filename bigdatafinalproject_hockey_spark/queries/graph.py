@@ -21,12 +21,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdatafinalproject_hockey_spark import STATE_ROOT
 from bigdatafinalproject_hockey_spark.catalog import load_table
 from bigdatafinalproject_hockey_spark.operators import bucketing as bucket_ops
 from bigdatafinalproject_hockey_spark.plancapture import capture
 from bigdatafinalproject_hockey_spark.queries.base import register
 
-TMP_DIR = "/root/repo/.tmp"
+TMP_DIR = STATE_ROOT
 
 # Shared CTE head: canonical (p1 < p2) part co-purchase edges with
 # >= 2 co-occurring LINE-ITEM PAIRS, exactly mirroring

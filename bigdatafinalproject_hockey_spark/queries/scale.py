@@ -16,6 +16,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from bigdatafinalproject_hockey_spark import STATE_ROOT
 from bigdatafinalproject_hockey_spark.catalog import load_table
 from bigdatafinalproject_hockey_spark.functions.numeric import (
     cents_expr,
@@ -68,7 +69,7 @@ from bigdatafinalproject_hockey_spark.streaming import (
     stateful_user_totals,
 )
 
-TMP_DIR = "/root/repo/.tmp"
+TMP_DIR = STATE_ROOT
 
 # ---------------------------------------------------------------------------
 # joins beyond equi: as-of and range

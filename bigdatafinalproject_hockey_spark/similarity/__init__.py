@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from bigdatafinalproject_hockey_spark.functions.literals import literal_array
 from bigdatafinalproject_hockey_spark.functions.vectors import (
     as_double_array,
     cosine_expr,
@@ -1902,7 +1903,7 @@ def cosine_lsh_near_pairs(
         key: Column = F.lit(0)
         for i in range(bits_per_band):
             row = signs[b * bits_per_band + i]
-            proj = dot_expr(F.col("emb"), F.array(*[F.lit(s) for s in row]))
+            proj = dot_expr(F.col("emb"), literal_array(row, "double"))
             key = key + F.when(proj >= 0, F.lit(1 << i)).otherwise(F.lit(0))
         return key
 
@@ -2049,7 +2050,7 @@ def ann_lsh_near_pairs(
     )
 
     def key(t: int) -> Column:
-        proj = dot_expr(F.col("emb"), F.array(*[F.lit(w) for w in projs[t]]))
+        proj = dot_expr(F.col("emb"), literal_array(projs[t], "double"))
         return F.floor(F.round(proj / bucket_length, 6))
 
     keyed = base.select(

@@ -28,7 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bigdatafinalproject_hockey_spark.catalog import events_ts_encoding
+from bigdatafinalproject_hockey_spark import STATE_ROOT
+from bigdatafinalproject_hockey_spark.catalog import SCHEMAS, events_ts_encoding
 from bigdatafinalproject_hockey_spark.functions.numeric import cents_expr
 
 
@@ -58,19 +59,12 @@ def _events_stream_source(spark: SparkSession, sf_dir: str):
             return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
     schema = T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
+        [T.StructField(f.name, ts_type if f.name == "ts" else f.dataType) for f in SCHEMAS["events"]]
     )
     return schema, decode
 
 
-_TMP = "/root/repo/.tmp"
+_TMP = STATE_ROOT
 
 
 def _symlink_fresh(src: str, link: str) -> None:

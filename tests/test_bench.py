@@ -151,6 +151,88 @@ def test_parse_probe_lines_salvages_partial_tier_output():
     assert parse_probe_lines("") == {}
 
 
+def test_parse_probe_lines_skips_non_dict_payloads():
+    """A ``probes``/``probe_partial`` payload that is not a dict (a
+    truncated or foreign line) is skipped; the parse never raises out
+    of the bench and keeps every well-formed record."""
+    from bench import parse_probe_lines
+
+    rec_a = {"sec_1x": 1.0, "sec_100x": 9.0, "ratio": 9.0}
+    text = "\n".join(
+        json.dumps(doc)
+        for doc in (
+            {"probe_partial": ["a", 1.0]},
+            {"probes": "oops"},
+            {"probe_partial": {"a": rec_a}},
+            {"probes": 3},
+        )
+    )
+    assert parse_probe_lines(text) == {"a": rec_a}
+
+
+def test_kill_live_children_kills_the_whole_process_group(tmp_path):
+    """The SIGTERM handler kills every live tier/floors child's process
+    group before exiting: a grandchild (the child's JVM) must not
+    outlive it."""
+    import os
+    import subprocess
+    import sys
+    import threading
+    import time
+
+    pid_file = tmp_path / "grandchild.pid"
+    script = (
+        "import subprocess, sys, time\n"
+        "p = subprocess.Popen(['sleep', '120'])\n"
+        f"open({str(pid_file)!r}, 'w').write(str(p.pid))\n"
+        "time.sleep(120)\n"
+    )
+    raised = []
+
+    def run():
+        try:
+            bench.run_child([sys.executable, "-c", script], timeout=120)
+        except subprocess.CalledProcessError as exc:
+            raised.append(exc.returncode)
+
+    t = threading.Thread(target=run)
+    t.start()
+    deadline = time.time() + 30
+    while not (pid_file.exists() and pid_file.read_text()) and time.time() < deadline:
+        time.sleep(0.05)
+    grandchild = int(pid_file.read_text())
+    bench.kill_live_children()
+    t.join(timeout=30)
+    assert raised == [-9] and not bench._LIVE_CHILDREN
+
+    def alive(pid: int) -> bool:
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                return f.read().rsplit(")", 1)[1].split()[0] != "Z"
+        except FileNotFoundError:
+            return False
+
+    while alive(grandchild) and time.time() < deadline:
+        time.sleep(0.05)
+    assert not alive(grandchild)
+
+
+def test_run_child_timeout_kills_group_and_keeps_stdout():
+    """On timeout the child's group is killed and the stdout it printed
+    so far comes back on the exception, for the per-entry salvage."""
+    import subprocess
+    import sys
+
+    script = "import time; print('{\"probe_partial\": {}}', flush=True); time.sleep(60)"
+    try:
+        bench.run_child([sys.executable, "-c", script], timeout=3)
+    except subprocess.TimeoutExpired as exc:
+        assert exc.stdout.strip() == '{"probe_partial": {}}'
+    else:
+        raise AssertionError("no timeout")
+    assert not bench._LIVE_CHILDREN
+
+
 def test_probe_lists_reference_registered_queries():
     from bigdatafinalproject_hockey_spark.queries import QUERIES
 

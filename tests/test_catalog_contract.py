@@ -11,9 +11,12 @@ import datetime
 
 import pytest
 
+from pyspark.sql import types as T
+
 from bigdatafinalproject_hockey_spark.catalog import (
     SCHEMAS,
     events_ts_encoding,
+    footer_schema,
     load_table,
     verify_contract,
 )
@@ -45,6 +48,58 @@ def test_load_matches_catalog_schema(spark, name, sf_dir):
     # is normalized (its decode already breaks pushdown by necessity).
     got = [(n, "timestamp" if t == "timestamp_ntz" else t) for n, t in got]
     assert got == want
+
+
+@pytest.mark.parametrize("sf_dir", SF_DIRS)
+@pytest.mark.parametrize("name", sorted(SCHEMAS))
+def test_footer_schema_equals_spark_inference(spark, name, sf_dir):
+    """The schema load_table hands the reader is exactly the one Spark
+    infers from the same file: names, types (timestamp_ntz included)
+    and nullability. load_table's result differs only where it
+    normalizes events.ts to timestamp."""
+    path = f"{sf_dir}/{name}.parquet"
+    inferred = spark.read.parquet(path).schema
+    assert footer_schema(path) == inferred
+    want = T.StructType(
+        [
+            T.StructField(f.name, T.TimestampType(), f.nullable)
+            if (name, f.name) == ("events", "ts")
+            else f
+            for f in inferred.fields
+        ]
+    )
+    assert load_table(spark, name, sf_dir).schema == want
+
+
+@pytest.mark.parametrize("sf_dir", SF_DIRS)
+def test_load_table_starts_no_job(spark, sf_dir):
+    """Building a DataFrame over any table runs no Spark job: the schema
+    comes from the footer on the driver, not from inference."""
+    sc = spark.sparkContext
+    probe = f"load_table_probe{sf_dir}"
+    sc.setJobGroup(probe, probe)
+    try:
+        for name in sorted(SCHEMAS):
+            load_table(spark, name, sf_dir)
+        assert list(sc.statusTracker().getJobIdsForGroup(probe)) == []
+        spark.range(1).collect()  # control: the probe does see jobs
+        assert list(sc.statusTracker().getJobIdsForGroup(probe))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_partitioned_directory_table_still_loads(spark, tmp_path):
+    """A table stored as a partitioned directory is read by inference
+    and keeps its partition column."""
+    src = load_table(spark, "nation", SF_DIRS[0])
+    path = str(tmp_path / "nation.parquet")
+    src.write.partitionBy("n_regionkey").parquet(path)
+    assert footer_schema(path) is None
+    df = load_table(spark, "nation", str(tmp_path))
+    assert df.schema == spark.read.parquet(path).schema
+    assert "n_regionkey" in df.columns
+    key = ("n_nationkey", "n_name", "n_regionkey")
+    assert sorted(df.select(*key).collect()) == sorted(src.select(*key).collect())
 
 
 def test_events_ts_values_match_duckdb(spark):

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from bigdatafinalproject_hockey_spark import STATE_ROOT
 from bigdatafinalproject_hockey_spark.queries import QUERIES
 
 
@@ -124,8 +125,8 @@ def test_compaction_collapses_small_files(spark):
     from bigdatafinalproject_hockey_spark.sources.parquet import compact_parquet
 
     docs = load_table(spark, "documents", "/root/testdata/sf0.001")
-    src = "/root/repo/.tmp/compact_unit_src"
-    dst = "/root/repo/.tmp/compact_unit_dst"
+    src = f"{STATE_ROOT}/compact_unit_src"
+    dst = f"{STATE_ROOT}/compact_unit_dst"
     docs.repartition(64).write.mode("overwrite").parquet(src)
     assert len(glob.glob(f"{src}/*.parquet")) == 64
     out = compact_parquet(spark, src, dst, target_file_bytes=128 * 1024 * 1024)
@@ -150,7 +151,7 @@ def test_foreach_batch_upsert_replay_invariant(spark):
         t = foreach_batch_upsert(
             spark,
             s,
-            sink_path=f"/root/repo/.tmp/upsert_replay{copies}",
+            sink_path=f"{STATE_ROOT}/upsert_replay{copies}",
             key_cols=["event_id"],
         )
         out[copies] = t.count()

@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from bigdatafinalproject_hockey_spark import STATE_ROOT
 from bigdatafinalproject_hockey_spark.dedup.exact import dedup_exact_keep_first
 from bigdatafinalproject_hockey_spark.dedup.simhash import (
     hamming_expr,
@@ -24,7 +25,7 @@ from bigdatafinalproject_hockey_spark.multimodal import (
 from bigdatafinalproject_hockey_spark.operators.sampling import sample_by_key
 from bigdatafinalproject_hockey_spark.sources.csv import scan_csv
 
-TMP = "/root/repo/.tmp"
+TMP = STATE_ROOT
 
 
 def test_scan_csv_null_sentinels(spark, tmp_path):
@@ -207,9 +208,10 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
 
     orders = spark.read.parquet(f"{sf_dir}/orders.parquet")
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
     for t in ("b_orders", "b_lineitem"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"/root/repo/spark-warehouse/{t}", ignore_errors=True)
+        shutil.rmtree(os.path.join(warehouse, t), ignore_errors=True)
     sink_bucketed_table(orders, "b_orders", ["o_orderkey"], 4, sort_by=["o_orderkey"])
     sink_bucketed_table(li, "b_lineitem", ["l_orderkey"], 4, sort_by=["l_orderkey"])
     # force the sort-merge path: at test scale the planner would rather
@@ -1252,14 +1254,14 @@ def test_manifest_pruned_scan_opens_fewer_files(spark):
         (r.o_orderstatus, r.n_orders, r.revenue)
         for r in q_scan_files_pruned(spark, sf_dir).collect()
     }
-    manifest = spark.read.parquet("/root/repo/.tmp/orders_manifest_sf0_001")
+    manifest = spark.read.parquet(f"{TMP}/orders_manifest_sf0_001")
     n_total = manifest.count()
     lo = F.lit("1999-01-01").cast("timestamp")
     hi = F.lit("1999-06-30").cast("timestamp")
     _pruned, n_read = mf.scan_pruned(spark, manifest, "o_orderdate", lo, hi)
     assert n_total == 16
     assert n_read <= 6, f"pruning ineffective: {n_read}/{n_total} files"
-    full = spark.read.parquet("/root/repo/.tmp/orders_clustered_sf0_001")
+    full = spark.read.parquet(f"{TMP}/orders_clustered_sf0_001")
     expect = {
         (r.o_orderstatus, r.n_orders, r.revenue)
         for r in (
@@ -2135,3 +2137,29 @@ def test_pq_lloyd_fit_improves_within_cell_recall(spark):
     r_init = recall(pq_codebooks(emb))
     r_fit = recall(pq_codebooks_lloyd(emb))
     assert r_fit > r_init, f"fit did not improve recall: {r_fit} <= {r_init}"
+
+
+def test_literal_helpers_match_per_element_forms(spark):
+    """literal_array / literal_map give the same data type and values as
+    the per-element F.array / F.create_map forms they replace, strings
+    with quotes and backslashes included."""
+    from bigdatafinalproject_hockey_spark.functions.literals import (
+        literal_array,
+        literal_map,
+    )
+
+    longs = [-(2**63), -821, 0, 983, 2**63 - 1]
+    doubles = [0.1, -1.0, 1e-300, 1e16, 0.95]
+    strings = {"it's": "a\\b", "\\'": "'", "x\\%_": "tab\there\\n", "é": ""}
+    quotas = {"en": 6000, "zh": 3_000_000_000}
+    pairs = [
+        (literal_array(longs, "bigint"), F.array(*[F.lit(v).cast("long") for v in longs])),
+        (literal_array(doubles, "double"), F.array(*[F.lit(v) for v in doubles])),
+        (literal_map(strings), F.create_map(*[F.lit(x) for kv in strings.items() for x in kv])),
+        (literal_map(quotas), F.create_map(*[F.lit(x) for kv in quotas.items() for x in kv])),
+    ]
+    for new, old in pairs:
+        got = spark.range(1).select(new.alias("v"))
+        want = spark.range(1).select(old.alias("v"))
+        assert got.schema == want.schema
+        assert got.collect() == want.collect()
